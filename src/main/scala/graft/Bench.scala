@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
@@ -91,9 +92,37 @@ object Bench {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 
+  /** Untimed warmup: a tiny end-to-end plan through the registered native
+    * expressions + md5 + a shuffle, so Janino, the codegen cache machinery
+    * and the parquet/noop writer JIT-compile before anything is timed. */
+  private def warmUp(spark: SparkSession): Unit = {
+    import org.apache.spark.sql.functions._
+    val warm = spark.range(256)
+      .select(col("id"), split(concat(col("id").cast("string"), lit(" warm up tokens")), " ").as("toks"))
+      .select(
+        md5(col("id").cast("string").cast("binary")).as("m"),
+        graft.llm.SimHash64.simhashCol(spark, "toks").as("sh"),
+        graft.llm.SimHashPortable60.simhashCol(spark, "toks").as("shp"),
+        graft.llm.TextOps.docFingerprint(col("id").cast("string")).as("fp"),
+        graft.llm.TextOps.portableDocFingerprint(col("id").cast("string")).as("pfp"))
+    warm.groupBy("m").agg(max("sh"), max("shp"), max("fp"), max("pfp"))
+      .write.format("noop").mode("overwrite").save()
+    // also exercise the ObjectHashAggregate collect_set → sort_array →
+    // array_join path: s18's cold-rep probe (round 11) showed the first
+    // volume pass through that generated class costs ~5× task time
+    // (238 s vs 44–57 s warm at sf1) purely in C2-JIT compilation
+    spark.range(4096)
+      .select((col("id") % 64).as("k"), col("id").cast("string").as("v"))
+      .groupBy("k")
+      .agg(array_join(sort_array(collect_set(col("v"))), "|").as("agg"),
+        countDistinct(col("v")).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    clearPersisted(spark)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus  = GraftSession.cores
     // a FILTERED dev run (SPARK_GRAFT_ONLY) must never clobber the tracked
     // full-registry artifact — it burned one round-8 commit before this
     // guard: the single-query JSON silently replaced the 160-query one
@@ -103,64 +132,9 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (sys.env.contains("SPARK_GRAFT_ONLY")) "bench/BENCH_DEV.json"
       else "bench/BENCH_DRIVER.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "8m"))
-      // AQE coalescing floor — measured BOTH ways in round 14 and kept at
-      // the Spark default: 256k/64k floors do fan CPU-dense small shuffles
-      // out to the cores (a21 3.25→2.46 warm), but suite-wide the extra
-      // tiny tasks cost more than they buy (full-registry A/B at sf0.1:
-      // 312.8 s @256k vs 260.6 s @1m, identical code —
-      // bench/BENCH_R14_MID{2,3}.json). Env knob kept for experiments.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "1m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
-    def jsonEscape(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-    // Untimed warmup: a tiny end-to-end plan through the registered native
-    // expressions + md5 + a shuffle, so Janino, the codegen cache machinery
-    // and the parquet/noop writer JIT-compile before anything is timed.
-    // SPARK_GRAFT_WARMUP=0 disables (to measure the true-cold profile).
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
-      import org.apache.spark.sql.functions._
-      val warm = spark.range(256)
-        .select(col("id"), split(concat(col("id").cast("string"), lit(" warm up tokens")), " ").as("toks"))
-        .select(
-          md5(col("id").cast("string").cast("binary")).as("m"),
-          graft.llm.SimHash64.simhashCol(spark, "toks").as("sh"),
-          graft.llm.SimHashPortable60.simhashCol(spark, "toks").as("shp"),
-          graft.llm.TextOps.docFingerprint(col("id").cast("string")).as("fp"),
-          graft.llm.TextOps.portableDocFingerprint(col("id").cast("string")).as("pfp"))
-      warm.groupBy("m").agg(max("sh"), max("shp"), max("fp"), max("pfp"))
-        .write.format("noop").mode("overwrite").save()
-      // also exercise the ObjectHashAggregate collect_set → sort_array →
-      // array_join path: s18's cold-rep probe (round 11) showed the first
-      // volume pass through that generated class costs ~5× task time
-      // (238 s vs 44–57 s warm at sf1) purely in C2-JIT compilation
-      spark.range(4096)
-        .select((col("id") % 64).as("k"), col("id").cast("string").as("v"))
-        .groupBy("k")
-        .agg(array_join(sort_array(collect_set(col("v"))), "|").as("agg"),
-          countDistinct(col("v")).as("n"))
-        .write.format("noop").mode("overwrite").save()
-      clearPersisted(spark)
-    }
+    warmUp(spark)
 
     // dev-only filter: SPARK_GRAFT_ONLY=<prefix> limits the run; the driver
     // doesn't set it, so round benches always run the full registry
@@ -202,7 +176,7 @@ object Bench {
             repGc(name)  :+= (gcMillis() - gc0)
             repShuffle(name) :+= (telemetry.snapshot() - sh0)
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               errors += name -> s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"
           }
           clearPersisted(spark)
@@ -226,7 +200,7 @@ object Bench {
     }
     val med = repSec.map { case (k, v) => k -> median(v) }
     val total = if (med.nonEmpty) med.values.sum else 0.0
-    val es = errors.map { case (k, v) => "\"" + jsonEscape(k) + "\":\"" + jsonEscape(v) + "\"" }
+    val es = errors.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
       .mkString("{", ",", "}")
 
     // full-fidelity artifact: complete names, every rep, gc telemetry;
@@ -239,7 +213,7 @@ object Bench {
       val shJson = if (sh.isEmpty) "" else
         ",\"shuffle_rw_bytes\":[" + sh.map(_.readBytes).max + "," + sh.map(_.writeBytes).max + "]" +
         ",\"spill_bytes\":[" + sh.map(_.memSpillBytes).max + "," + sh.map(_.diskSpillBytes).max + "]"
-      "\"" + jsonEscape(k) + "\":{\"sec\":" + f"${median(v)}%.6f" +
+      Json.str(k) + ":{\"sec\":" + f"${median(v)}%.6f" +
         ",\"min\":" + f"${v.min}%.6f" + ",\"max\":" + f"${v.max}%.6f" +
         ",\"reps\":" + v.map(x => f"$x%.6f").mkString("[", ",", "]") +
         ",\"gc_ms\":" + gc.mkString("[", ",", "]") + shJson +
@@ -252,30 +226,30 @@ object Bench {
     // run provenance: pins WHICH run produced an artifact even if the file
     // is copied — round-8's committed-vs-driver artifact confusion is
     // unambiguous with run_id + hostname + load in the record
-    val host = try java.net.InetAddress.getLocalHost.getHostName catch { case _: Throwable => "unknown" }
+    val host = try java.net.InetAddress.getLocalHost.getHostName catch { case NonFatal(_) => "unknown" }
     val startedAt = java.time.Instant.now().toString
     val runId = f"${host}-${ProcessHandle.current.pid}%d-${System.currentTimeMillis()}%d"
     val loadAvg = ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","reps":$reps,"interleaved":true,"sf":"${jsonEscape(sfDir)}","cpus":$cpus,""" +
-      s""""run_id":"${jsonEscape(runId)}","hostname":"${jsonEscape(host)}","written_at":"${jsonEscape(startedAt)}","load_avg_end":$loadAvg,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","reps":$reps,"interleaved":true,"sf":${Json.str(sfDir)},"cpus":$cpus,""" +
+      s""""run_id":${Json.str(runId)},"hostname":${Json.str(host)},"written_at":${Json.str(startedAt)},"load_avg_end":$loadAvg,""" +
       s""""queries":$fullQs,"errors":$es,""" +
-      s""""jvm":"${jsonEscape(System.getProperty("java.version"))}","heap_max_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)}}"""
+      s""""jvm":${Json.str(System.getProperty("java.version"))},"heap_max_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)}}"""
     try {
       val p = Paths.get(outPath)
       Option(p.getParent).foreach(Files.createDirectories(_))
       Files.write(p, full.getBytes(StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"bench: could not write $outPath: ${e.getMessage}")
     }
 
     // compact stdout line (must fit the driver's ~2000-char tail window)
     val short = shortKeys(names)
-    val qs = med.map { case (k, v) => "\"" + jsonEscape(short(k)) + "\":" + f"$v%.3f" }
+    val qs = med.map { case (k, v) => Json.str(short(k)) + ":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     println(
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","stat":"median","reps":$reps,"queries":$qs,"errors":$es,""" +
-      s""""sf":"${jsonEscape(sfDir)}","keys":"prefix-before-first-underscore","full":"${jsonEscape(outPath)}"}""")
+      s""""sf":${Json.str(sfDir)},"keys":"prefix-before-first-underscore","full":${Json.str(outPath)}}""")
     // Round 15, additions-only: at 329 queries the per-query line above is
     // ~8 KB, longer than the driver's ~2000-char tail capture, so its JSON
     // parse came back null every round (PERF_r14 "prev_bench_ok": false
@@ -285,7 +259,7 @@ object Bench {
     // per-query line, timing protocol and env contract are untouched.
     println(
       s"""{"metric":"total","value":${f"$total%.3f"},"total_sec":${f"$total%.3f"},"unit":"sec","stat":"median","reps":$reps,""" +
-      s""""n":${med.size},"errors":$es,"sf":"${jsonEscape(sfDir)}","cpus":$cpus,"full":"${jsonEscape(outPath)}"}""")
+      s""""n":${med.size},"errors":$es,"sf":${Json.str(sfDir)},"cpus":$cpus,"full":${Json.str(outPath)}}""")
     spark.stop()
   }
 }

@@ -1,81 +1,96 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+/**
+ * Correctness dump: each SparkEntry.queries result → parquet under
+ * `outDir/<name>`, plus oracle_sql.json for the DuckDB compare
+ * (tools/local_check.py) and failures.json naming every query that threw.
+ *
+ * Usage: Verify <sfDir> <outDir> [threads=1] [fifo|fair]
+ *
+ * With threads > 1 the workers share ONE SparkSession — the concurrency
+ * gate (CORRECTNESS_CONCURRENT.json): session-conf leaks across queries,
+ * temp-view or scratch-path collisions, non-thread-safe driver state and
+ * scheduler starvation all show up as failed or wrong dumps. Under `fair`
+ * each worker is its own FAIR scheduler pool, so one heavy query cannot
+ * convoy the rest.
+ *
+ * Prints one JSON summary line (per-query seconds, errors, failed count).
+ * The exit status stays 0 when queries fail: the dumps of the others are
+ * still compared, and failures.json plus the summary name the failed ones.
+ */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER (dev-only; the driver never sets it) lets the
-    // round's cluster smoke run this same main under
-    // local-cluster[w,c,mem] — real executor JVMs, real serialization of
-    // the native expressions and TVF plans. That mode needs the library
-    // on the executors' classpath: pass the packaged jar via
-    // SPARK_GRAFT_JARS (comma-separated, fed to spark.jars).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-    val builder = sys.env.get("SPARK_GRAFT_JARS") match {
-      case Some(jars) => builder0.config("spark.jars", jars)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"))
-      case None => builder0
-    }
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "8m"))
-      // events.parquet carries TIMESTAMP(NANOS) which Spark's parquet reader
-      // rejects by default; read as long (ns since epoch) instead.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = args(0)
+    val outDir = args(1)
+    val threads = args.lift(2).fold(1)(_.toInt)
+    val fair = args.lift(3).exists(_.equalsIgnoreCase("fair"))
+    val spark =
+      if (fair) GraftSession("spark.scheduler.mode" -> "FAIR") else GraftSession()
     new java.io.File(outDir).mkdirs()
-    // dev-only filter: SPARK_GRAFT_ONLY=<prefix> limits the dump; the driver
-    // doesn't set it, so round verifies always dump the full registry
+
+    // dev-only filter: SPARK_GRAFT_ONLY=<prefix,...> limits the dump
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    SparkEntry.queries
+    // deterministic heavy/light interleave: adjacent pickups mix query
+    // families instead of draining one file's queries together
+    val work = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .sortBy { case (name, _) => java.util.Objects.hashCode(name.reverse) }
+    val queue = new ConcurrentLinkedQueue(work.asJava)
+    val times = new ConcurrentHashMap[String, Double]()
+    val errors = new ConcurrentHashMap[String, String]()
+    val done = new AtomicInteger(0)
+
+    def worker(i: Int): Unit = {
+      if (fair) spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft-pool-$i")
+      var next = queue.poll()
+      while (next != null) {
+        val (name, fn) = next
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          times.put(name, (System.nanoTime() - t0) / 1e9)
+        } catch { case NonFatal(e) =>
+          errors.put(name, s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
+        val n = done.incrementAndGet()
+        if (n % 25 == 0) System.err.println(s"[verify] $n/${work.size} done")
+        next = queue.poll()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val pool = Executors.newFixedThreadPool(threads)
+    // get() rethrows a fatal error from any worker and fails the run
+    try (0 until threads).map(i => pool.submit[Unit](() => worker(i))).foreach(_.get())
+    finally pool.shutdown()
+
+    def sorted[V](m: ConcurrentHashMap[String, V]) = m.asScala.toSeq.sortBy(_._1)
+    def write(path: String, text: String): Unit = Files.writeString(Paths.get(path), text)
+    def strMap(kvs: Iterable[(String, String)]) = Json.obj(kvs.map { case (k, v) => k -> Json.str(v) })
+    val errorsJson = strMap(sorted(errors))
+    write(s"$outDir/oracle_sql.json", strMap(SparkEntry.oracleSql))
+    write(s"$outDir/failures.json", errorsJson)
     // twin manifest (round 10): each no-oracle row → its oracled portable
-    // twin, so the driver's correctness artifact self-documents that every
-    // `no_oracle` row is adjudicated by a green exact twin (previously
-    // COVERAGE.md prose). Written BOTH next to the dump and to the tracked
-    // bench/TWINS.json (content is registry-derived and deterministic, so
-    // driver re-runs never dirty git).
-    val twinsJson = graft.queries.Registry.twins.toSeq.sorted
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/twins.json"), twinsJson)
-    try Files.writeString(Paths.get("bench/TWINS.json"), twinsJson)
-    catch { case e: Throwable =>
+    // twin. Written next to the dump and to the tracked bench/TWINS.json
+    // (registry-derived and deterministic, so re-runs never dirty git).
+    val twinsJson = strMap(graft.queries.Registry.twins.toSeq.sorted)
+    write(s"$outDir/twins.json", twinsJson)
+    try write("bench/TWINS.json", twinsJson)
+    catch { case NonFatal(e) =>
       System.err.println(s"[verify] could not write bench/TWINS.json: ${e.getMessage}")
     }
+
+    val timesJson = Json.obj(sorted(times).map { case (k, v) => k -> f"$v%.3f" })
+    println(s"""{"mode":"${if (fair) "fair" else "fifo"}","threads":$threads,""" +
+      s""""queries":${work.size},"failed":${errors.size},""" +
+      s""""times":$timesJson,"errors":$errorsJson}""")
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft.api
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -19,14 +21,16 @@ object Sources {
 
   final class PageDriftException(msg: String) extends RuntimeException(msg)
 
-  /** Retry with linear backoff (pdc_helpers.py:42-76: ≤10 tries, linear). */
+  /** Retry with linear backoff (pdc_helpers.py:42-76: ≤10 tries, linear).
+    * Only non-fatal failures are retried: an interrupt or a JVM error
+    * propagates from the first attempt. */
   def retry[T](maxAttempts: Int = 10, backoffMs: Long = 100)(f: => T): T = {
     var attempt = 0
     var last: Throwable = null
     while (attempt < maxAttempts) {
       try return f
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           last = e; attempt += 1
           if (attempt < maxAttempts) Thread.sleep(backoffMs * attempt)
       }

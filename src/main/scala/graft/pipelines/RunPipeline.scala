@@ -2,6 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.clinical.{Clinical, EntitySpec}
 import graft.io.Io
 import graft.ops.{Diff, Golden}
@@ -107,16 +108,8 @@ object RunPipeline {
       new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8"))
       .getOrElse(DefaultConfig)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val outRoot = args.lift(2).getOrElse("/root/repo/target/demo")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val outRoot = args.lift(2).getOrElse("target/demo")
+    val spark = GraftSession()
     val executed = run(spark, StepRunner.parseConfig(configText), sfDir, outRoot)
     println(s"pipeline complete; steps executed: ${executed.mkString(", ")}")
     spark.stop()

@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import graft.GraftSession
 import graft.queries.Registry
 
 /**
@@ -13,16 +15,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val only = args.lift(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val outDir = new java.io.File("/root/repo/target/explains"); outDir.mkdirs()
+    val spark = GraftSession()
+    val outDir = new java.io.File("target/explains"); outDir.mkdirs()
 
     Registry.all.filter(q => only.forall(q._1.startsWith)).foreach { case (name, q) =>
       try {
@@ -45,7 +39,7 @@ object Explain {
           .count(!_.contains("[]"))
         println(f"$name%-28s exch=$exchanges bhj=$bcasts smj=$smj wsc=$codegen pushedFilters=$pushed")
       } catch {
-        case e: Throwable => println(s"$name EXPLAIN FAILED: ${e.getMessage.take(120)}")
+        case NonFatal(e) => println(s"$name EXPLAIN FAILED: ${e.getMessage.take(120)}")
       }
     }
     spark.stop()

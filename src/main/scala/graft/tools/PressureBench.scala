@@ -3,8 +3,11 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.functions._
+
+import graft.{GraftSession, Json}
 
 /**
  * Memory-pressure correctness+spill harness — the round-10 verdict's
@@ -25,8 +28,10 @@ import org.apache.spark.sql.functions._
  * run is the graceful-degradation proof.
  *
  * Usage: runMain graft.tools.PressureBench <sfDir> <outJson> <names,csv>
- * Knobs (env): SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE_PARTS,
- *   SPARK_GRAFT_MEM_FRACTION (spark.memory.fraction), heap via run_main.sh.
+ * On top of the shared session (graft.GraftSession): SPARK_GRAFT_SHUFFLE_PARTS
+ * (default: the cores) and SPARK_GRAFT_MEM_FRACTION (spark.memory.fraction);
+ * the heap via run_main.sh. bench/BENCH_PRESSURE.json was taken with 4
+ * shuffle partitions.
  */
 object PressureBench {
 
@@ -34,27 +39,13 @@ object PressureBench {
     val sfDir = args(0)
     val outPath = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cores
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
     val memFrac = sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.6")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.memory.fraction", memFrac)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "8m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(
+      "spark.sql.shuffle.partitions" -> parts,
+      "spark.memory.fraction" -> memFrac)
     val telemetry = new ShuffleTelemetry(spark.sparkContext)
-
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
 
     val entries = names.map { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
@@ -77,13 +68,14 @@ object PressureBench {
         println(f"$name%-28s ${wall}%8.2fs rows=${fp.getLong(0)}%-9d hsum=$hsum " +
           f"spill=${d.memSpillBytes / 1024 / 1024}MB/${d.diskSpillBytes / 1024 / 1024}MB " +
           f"shuffle=${d.readBytes / 1024 / 1024}MB")
-        s""""${esc(name)}":{"sec":${f"$wall%.3f"},"rows":${fp.getLong(0)},"fingerprint":"$hsum",""" +
+        s"""${Json.str(name)}:{"sec":${f"$wall%.3f"},"rows":${fp.getLong(0)},"fingerprint":"$hsum",""" +
           s""""shuffle_rw_bytes":[${d.readBytes},${d.writeBytes}],""" +
           s""""spill_bytes":[${d.memSpillBytes},${d.diskSpillBytes}]}"""
       } catch {
-        case e: Throwable =>
-          println(s"$name FAILED: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
-          s""""${esc(name)}":{"error":"${esc(e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("").take(200))}"}"""
+        case NonFatal(e) =>
+          val msg = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"
+          println(s"$name FAILED: $msg")
+          s"""${Json.str(name)}:{"error":${Json.str(msg)}}"""
       }
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
@@ -92,7 +84,7 @@ object PressureBench {
 
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     val json =
-      s"""{"sf":"${esc(sfDir)}","cpus":$cpus,"shuffle_partitions":$parts,""" +
+      s"""{"sf":${Json.str(sfDir)},"cpus":$cpus,"shuffle_partitions":$parts,""" +
       s""""memory_fraction":$memFrac,"heap_max_mb":$heapMb,""" +
       s""""queries":${entries.mkString("{", ",", "}")}}"""
     val p = Paths.get(outPath)

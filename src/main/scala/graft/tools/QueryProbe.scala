@@ -6,7 +6,8 @@ import scala.collection.mutable
 
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
 
 /**
  * Per-query diagnostic: runs one or more registered queries for N reps on
@@ -56,21 +57,7 @@ object QueryProbe {
     val sfDir = args(1)
     val reps = args.lift(2).filterNot(_.startsWith("--")).map(_.toInt).getOrElse(3)
     val wantRows = args.contains("--rows")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "8m"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "1m")) // match Bench
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val tap = new StageTap
     spark.sparkContext.addSparkListener(tap)

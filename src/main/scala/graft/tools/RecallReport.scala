@@ -3,8 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.llm.RecallMetrics
 
 /**
@@ -20,14 +19,7 @@ object RecallReport {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val outPath = args.lift(1).getOrElse("bench/RECALL.json")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     // the same measurements AnnRecallSpec gates on, at registered params
     val lsh = RecallMetrics.lshRecallAt5(spark, sfDir)

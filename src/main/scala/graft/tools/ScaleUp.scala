@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /**
  * Synthesizes a ×N replica of a driver testdata dir (default: sf0.1 → a
@@ -56,17 +58,9 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val out = args.lift(1).getOrElse("/root/repo/target/testdata/sf1")
+    val out = args.lift(1).getOrElse("target/testdata/sf1")
     val n = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val BigStride = 10000000L   // orderkey/event_id (max ~1.5e6 at sf0.1)
     val SmallStride = 1000000L  // entity keys (max ~2e4 at sf0.1)

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /**
  * Synthesizes a SKEWED replica of a driver testdata dir: same schema,
@@ -46,20 +48,13 @@ object SkewUp {
 
   def main(args: Array[String]): Unit = {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val out = args.lift(1).getOrElse("/root/repo/target/testdata/skew01")
+    val out = args.lift(1).getOrElse("target/testdata/skew01")
     val evK = args.lift(2).map(_.toInt).getOrElse(300)
     val liK = args.lift(3).map(_.toInt).getOrElse(8000)
     val ordK = args.lift(4).map(_.toInt).getOrElse(1500)
     val docK = args.lift(5).map(_.toInt).getOrElse(2000)
 
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 

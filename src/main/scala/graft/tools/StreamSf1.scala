@@ -3,11 +3,12 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.GraftSession
 import graft.streaming.{HourlyCount, StreamDoc, Streaming}
 
 /**
@@ -31,20 +32,10 @@ import graft.streaming.{HourlyCount, StreamDoc, Streaming}
 object StreamSf1 {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.lift(0).getOrElse("/root/repo/target/testdata/sf1")
+    val sfDir = args.lift(0).getOrElse("target/testdata/sf1")
     val outPath = args.lift(1).getOrElse("STREAM_SF1.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "8m"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession()
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

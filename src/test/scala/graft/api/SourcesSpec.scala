@@ -35,6 +35,22 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("retry does not retry fatal errors: an interrupt propagates after one attempt") {
+    var calls = 0
+    intercept[InterruptedException] {
+      Sources.retry(maxAttempts = 10, backoffMs = 1) {
+        calls += 1
+        throw new InterruptedException("stop")
+      }
+    }
+    assert(calls === 1)
+    calls = 0
+    intercept[RuntimeException] {
+      Sources.retry(maxAttempts = 3, backoffMs = 1) { calls += 1; sys.error("transient") }
+    }
+    assert(calls === 3)
+  }
+
   test("fetchCursor walks rel=next chain (quant_data_matrix_pdc.py:49-131)") {
     val data = ('a' to 'k').map(_.toString)
     val out = Sources.fetchCursor[String] { cursor =>

@@ -7,7 +7,7 @@ import graft.SparkTestBase
 class BucketingSpec extends AnyFunSuite with SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
-  private val root = "/root/repo/target/bucketing_spec"
+  private lazy val root = tempDir("bucketing_spec")
 
   private def orders = spark.read.parquet(s"$sf/orders.parquet")
   private def customer = spark.read.parquet(s"$sf/customer.parquet")

@@ -29,8 +29,9 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compactDir rewrites many small files into one file per bin, rows intact") {
-    val dir = "/root/repo/target/compaction_spec/small"
-    val out = "/root/repo/target/compaction_spec/compacted"
+    val root = tempDir("compaction_spec")
+    val dir = s"$root/small"
+    val out = s"$root/compacted"
     val df = spark.range(0, 20000).select(col("id"),
       concat(lit("row-payload-"), col("id")).as("payload"))
     df.repartition(40).write.mode("overwrite").parquet(dir)
@@ -60,8 +61,9 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
 
   test("compactDir on an empty directory returns the empty plan, no throw, no output") {
     import org.apache.hadoop.fs.Path
-    val dir = "/root/repo/target/compaction_spec/empty"
-    val out = "/root/repo/target/compaction_spec/empty_out"
+    val root = tempDir("compaction_spec")
+    val dir = s"$root/empty"
+    val out = s"$root/empty_out"
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(dir), true); fs.delete(new Path(out), true)
     fs.mkdirs(new Path(dir))
@@ -72,8 +74,9 @@ class CompactionSpec extends AnyFunSuite with SparkTestBase {
 
   test("compactDir keeps rows whose file names need URI decoding (space, plus, percent)") {
     import org.apache.hadoop.fs.Path
-    val dir = "/root/repo/target/compaction_spec/oddnames"
-    val out = "/root/repo/target/compaction_spec/oddnames_out"
+    val root = tempDir("compaction_spec")
+    val dir = s"$root/oddnames"
+    val out = s"$root/oddnames_out"
     val df = spark.range(0, 300).select(col("id"))
     df.repartition(3).write.mode("overwrite").parquet(dir)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -9,8 +9,7 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   private def emptyLedger = Seq.empty[String].toDF("path")
-  private def tmpDir: java.io.File = java.nio.file.Files
-    .createTempDirectory("graft-inc").toFile
+  private def tmpDir: java.io.File = new java.io.File(tempDir("graft-inc"))
 
   test("readNewFiles on a missing directory returns an empty delta, no crash") {
     val dir = new java.io.File(tmpDir, "never-written").getAbsolutePath

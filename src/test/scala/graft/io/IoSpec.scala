@@ -7,8 +7,7 @@ import graft.SparkTestBase
 class IoSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private def tmp(): String = java.nio.file.Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "iospec").toString
+  private def tmp(): String = tempDir("iospec")
 
   test("readTsv: duplicate headers deduped, cells normalized (data_helpers.py:489-557)") {
     val dir = tmp()
@@ -192,7 +191,7 @@ class IoSpec extends AnyFunSuite with SparkTestBase {
 
   test("readSince: only files newer than the watermark are scanned; watermark advances") {
     import org.apache.hadoop.fs.Path
-    val dir = "/root/repo/target/io_spec/since"
+    val dir = s"${tempDir("io_spec")}/since"
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def setMtimes(skip: Set[String], t: Long): Unit =
       fs.listStatus(new Path(dir))
@@ -231,7 +230,7 @@ class IoSpec extends AnyFunSuite with SparkTestBase {
 
   test("readSince: a file landing in the SAME millisecond as the watermark is not lost") {
     import org.apache.hadoop.fs.Path
-    val dir = "/root/repo/target/io_spec/since_boundary"
+    val dir = s"${tempDir("io_spec")}/since_boundary"
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def names: Set[String] = fs.listStatus(new Path(dir))
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))

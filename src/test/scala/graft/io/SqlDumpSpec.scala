@@ -9,7 +9,7 @@ import graft.SparkTestBase
 class SqlDumpSpec extends AnyFunSuite with SparkTestBase {
 
   private def write(sql: String): String = {
-    val f = java.io.File.createTempFile("graft-dump", ".sql")
+    val f = new java.io.File(tempDir("graft-dump"), "dump.sql")
     java.nio.file.Files.write(f.toPath, sql.getBytes("UTF-8"))
     f.getAbsolutePath
   }

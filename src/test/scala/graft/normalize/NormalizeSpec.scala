@@ -1,15 +1,10 @@
 package graft.normalize
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
-class NormalizeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+import graft.SparkTestBase
+
+class NormalizeSpec extends AnyFunSuite with SparkTestBase {
 
   test("normalizeValueScala — null markers, bools, trivial floats (data_helpers.py:447-486)") {
     import Normalize.normalizeValueScala

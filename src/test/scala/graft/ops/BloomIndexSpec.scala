@@ -40,7 +40,7 @@ class BloomIndexSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("real parquet files: the index prunes the scan to candidate files, same answer") {
-    val path = "/root/repo/target/bloom_spec/orders16"
+    val path = s"${tempDir("bloom_spec")}/orders16"
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     orders.repartition(16, col("o_orderkey")).write.mode("overwrite").parquet(path)

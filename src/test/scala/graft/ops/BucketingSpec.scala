@@ -20,7 +20,7 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
       }
-      rm(new java.io.File(s"/root/repo/target/spark-warehouse/$t"))
+      rm(new java.io.File(s"${SparkTestBase.Warehouse}/$t"))
     }
     (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
       .write.mode("overwrite").bucketBy(8, "k").sortBy("k").saveAsTable("bspec_a")

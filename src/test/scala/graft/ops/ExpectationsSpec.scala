@@ -70,7 +70,7 @@ class ExpectationsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("one scan for the whole suite (rules are expressions, not jobs)") {
-    val dir = java.nio.file.Files.createTempDirectory("expect").toString
+    val dir = tempDir("expect")
     df.write.mode("overwrite").parquet(s"$dir/t")
     val t = spark.read.parquet(s"$dir/t")
     val out = gate(t, Seq(ExpectNotNull("a", "seg"), ExpectInRange("b", "price", 0L, 100L),

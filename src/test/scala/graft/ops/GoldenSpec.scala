@@ -23,8 +23,7 @@ class GoldenSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compareToGolden blesses on first run, compares after") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "golden").toString
+    val dir = tempDir("golden")
     val df = Seq((1L, "a")).toDF("id", "v")
     val first = Golden.compareToGolden(spark, df, s"$dir/g", Seq("id"))
     assert(first.head.mode === "blessed")

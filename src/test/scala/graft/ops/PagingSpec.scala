@@ -30,7 +30,7 @@ class PagingSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("plan: pushed tuple predicate + TakeOrderedAndProject, never a global sort") {
-    val dir = java.nio.file.Files.createTempDirectory("page").toString
+    val dir = tempDir("page")
     df.write.mode("overwrite").parquet(s"$dir/t")
     val t = spark.read.parquet(s"$dir/t")
     val p = Paging.keysetPage(t, Seq("a" -> lit(2L), "b" -> lit(5L)), 3)

@@ -24,8 +24,9 @@ class ZOrderSpec extends AnyFunSuite with SparkTestBase {
       .select(col("o_orderkey"), col("o_custkey"),
         floor(col("o_totalprice")).cast("long").as("pb"))
     val nFiles = 8
-    val zPath = "/root/repo/target/zorder_spec/z"
-    val lPath = "/root/repo/target/zorder_spec/linear"
+    val root = tempDir("zorder_spec")
+    val zPath = s"$root/z"
+    val lPath = s"$root/linear"
     // NORMALIZE to comparable widths before interleaving (the documented
     // requirement): cust is 8-bit (0..149); price spans ~19 bits, so take
     // its top 8 (>> 11). Interleaving the raw 19-bit price instead
@@ -72,7 +73,7 @@ class ZOrderSpec extends AnyFunSuite with SparkTestBase {
     // the degenerate layout the doc warns about: interleaving the RAW
     // 19-bit price against 8-bit cust sorts by price and skips nothing
     // on cust
-    val dPath = "/root/repo/target/zorder_spec/degenerate"
+    val dPath = s"${tempDir("zorder_spec")}/degenerate"
     ZOrder.zOrderWrite(orders, dPath, col("o_custkey"), col("pb"), nFiles)
     val db = boxes(dPath)
     assert(scanFrac(db, "cust", custProbes) > 0.9, "degenerate layout should not prune cust")

@@ -110,8 +110,7 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("RunPipeline end-to-end: load → build → publish → QC (SURVEY §3)") {
-    val outRoot = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "demo").toString
+    val outRoot = tempDir("demo")
     val cfg = StepRunner.parseConfig(RunPipeline.DefaultConfig)
     val executed = RunPipeline.run(spark, cfg, "/root/testdata/sf0.001", outRoot)
     assert(executed === Seq("load_tables", "build_clinical", "build_per_sample_file",
@@ -153,8 +152,7 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("clusterWrite orders rows within partitions") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "cluster").toString
+    val dir = tempDir("cluster")
     val df = Seq((3, "c"), (1, "a"), (2, "b")).toDF("k", "v")
     StagedBuilds.clusterWrite(df, s"$dir/out", Seq("k"), partitions = 1)
     val back = spark.read.parquet(s"$dir/out").as[(Int, String)].collect()

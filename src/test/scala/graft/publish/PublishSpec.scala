@@ -6,11 +6,7 @@ import graft.SparkTestBase
 class PublishSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private def freshRoot(): String = {
-    val f = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "pubspec").toString
-    f
-  }
+  private def freshRoot(): String = tempDir("pubspec")
 
   test("publish: v1, identical skip, changed v2 (create_modify.py:210-277)") {
     val root = freshRoot()
@@ -235,7 +231,7 @@ class PublishSpec extends AnyFunSuite with SparkTestBase {
   test("vacuum: age grace keeps young versions, keepLast floor, survivors stay readable") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("vac").toString
+    val root = tempDir("vac")
     val t = Seq((1L, "a")).toDF("k", "v")
     (1 to 3).foreach(i => Publish.publish(spark, t.withColumn("k", col("k") + i),
       root, "fam", Publish.PointerCurrent))

@@ -315,8 +315,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import graft.llm.{Curation, QualityClassifier, TextOps}
     val m = QualityClassifier.DefaultModel
-    val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "curckpt").toString
+    val ckpt = tempDir("curckpt")
     // the standing corpus the increment dedups against (static side)
     val corpusTexts = Seq(
       (100L, "the query planner pushes each filter below the join so the scan reads fewer pages"),
@@ -390,8 +389,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("near-dup keeper state survives a checkpoint stop/restart") {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ckpt").toString
+    val ckpt = tempDir("ckpt")
     val base = "the quick brown fox jumps over the lazy dog again and again today"
     val mem = MemoryStream[StreamDoc]
     // memory sink refuses checkpoint recovery in Append mode; foreachBatch
@@ -445,8 +443,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("open-session state survives a checkpoint stop/restart") {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ckpt").toString
+    val ckpt = tempDir("ckpt")
     val mem = MemoryStream[Event]
     val got = new java.util.concurrent.ConcurrentLinkedQueue[UserSession]()
     def start() = Streaming.sessionize(
@@ -481,8 +478,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("streaming parquet file sink is exactly-once across a restart") {
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "fsink").toString
+    val base = tempDir("fsink")
     val mem = MemoryStream[Event]
     def start() = Streaming.windowedCounts(mem.toDS(), "1 minute", "10 seconds")
       .writeStream.format("parquet")

@@ -20,7 +20,8 @@ if "--json" in sys.argv:
         args.remove(json_out)
 
 sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
-out_dir = args[1] if len(args) > 1 else "/root/repo/target/verify_out"
+out_dir = args[1] if len(args) > 1 else os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "..", "target", "verify_out")
 only = [p for p in (args[2].split(",") if len(args) > 2 else []) if p]
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",

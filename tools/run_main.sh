@@ -5,6 +5,7 @@
 # Usage: run_main.sh [-Xmx<heap>] <mainClass> [args...]
 # Extra JVM -D flags can be passed via RUN_MAIN_JVM_OPTS.
 set -euo pipefail
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 HEAP="8g"
 if [[ "${1:-}" == -Xmx* ]]; then HEAP="${1#-Xmx}"; shift; fi
 MAIN="$1"; shift
@@ -17,5 +18,5 @@ done
 exec java -Xmx"$HEAP" "${ADD_OPENS[@]}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   ${RUN_MAIN_JVM_OPTS:-} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:?SPARK_HOME must name the Spark installation}/jars/*" \
   "$MAIN" "$@"
